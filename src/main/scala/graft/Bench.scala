@@ -198,18 +198,27 @@ object Bench {
     // a local-iteration knob (perf work on one family without paying the
     // full suite); the driver never sets it, so the contract is unchanged
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
+    // a gate that throws keeps its (short) time in the map, so the failure
+    // itself is reported: on stderr and as BENCH_LOCAL.json's `failed`
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     val results = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
       .map { case (name, fn) =>
+        var error: Throwable = null
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        name -> (System.nanoTime() - t0) / 1e9
+        try { fn(spark, sfDir).count() } catch { case e: Throwable => error = e; -1L }
+        val sec = (System.nanoTime() - t0) / 1e9
+        if (error != null) {
+          failed += name
+          System.err.println(s"[bench] gate '$name' failed: $error")
+        }
+        name -> sec
       }
     def fmt(v: Double, dp: Int): String = {
       val s = java.util.Locale.ROOT
       String.format(s, s"%.${dp}f", Double.box(v))
     }
-    def jsonFor(qs: Iterable[(String, Double)], qdp: Int): String = {
+    def jsonFor(qs: Iterable[(String, Double)], qdp: Int, tail: String = ""): String = {
       val qj = qs.map { case (k, v) => "\"" + k + "\":" + fmt(v, qdp) }
         .mkString("{", ",", "}")
       val total = if (results.nonEmpty) results.values.sum else 0.0
@@ -217,7 +226,7 @@ object Bench {
         s""""queries":$qj,"sf":"$sfDir",""" +
         s""""build_docs_per_sec":${fmt(docsPerSec, 1)},"n_docs":$nDocs,""" +
         s""""bm25_top10_p50_ms":${fmt(p50Ms, 1)},"bm25_top10_p95_ms":${fmt(p95Ms, 1)},""" +
-        s""""grammar_top10_p50_ms":${fmt(grammarP50Ms, 1)}}"""
+        s""""grammar_top10_p50_ms":${fmt(grammarP50Ms, 1)}$tail}"""
     }
     // The one-line JSON contract, two sinks with ONE deliberate size
     // difference: the FILE (BENCH_LOCAL.json) carries the full per-query
@@ -226,7 +235,9 @@ object Bench {
     // a bounded tail capture (~2.3 KB) clips its FRONT -- losing `metric`
     // and `value` and failing the parse -- so the stdout line must stay
     // well under any plausible tail window (~700 bytes with 10 entries).
-    val fullLine = jsonFor(results, 1)
+    // Only the file carries the names of gates that threw.
+    val fullLine = jsonFor(results, 1,
+      failed.sorted.map("\"" + _ + "\"").mkString(""","failed":[""", ",", "]"))
     val summaryLine =
       jsonFor(results.toSeq.sortBy { case (k, v) => (-v, k) }.take(10), 1)
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")

@@ -1,6 +1,8 @@
 package graft.api
 
-import graft.query.{Excerpts, Executor, QueryParser}
+import graft.index.IndexReader
+import graft.query.{Excerpts, Executor, IndexExecutor, IndexQueryCache, LocalServe,
+  QueryParams, QueryParser}
 import org.apache.spark.sql.DataFrame
 
 /** One hit; url comes from the docs store / a corpus `url` column when
@@ -77,13 +79,14 @@ object Search {
     */
   def search(corpus: DataFrame, query: String, k: Int = 10,
              completionsK: Int = 10, excerptRadius: Int = 2,
-             params: graft.query.QueryParams = graft.query.QueryParams.Default): SearchResult =
-    assemble(query, k, completionsK,
-      Executor.hits(corpus, query, k, params),
-      Executor.completions(corpus, query, completionsK, params),
-      (hits, ex, pf) =>
-        Excerpts.generateAll(corpus, hits, ex, pf, excerptRadius, params.excerptsPerHit),
-      hits => if (corpus.columns.contains("url")) urlsOf(corpus, hits) else Map.empty)
+             params: QueryParams = QueryParams.Default): SearchResult = {
+    val page = pageOf(Executor.hits(corpus, query, k, params))
+    val terms = Terms(query)
+    val (excerpts, urls) = joinDocs(corpus, page, terms, excerptRadius,
+      params.excerptsPerHit, withUrls = corpus.columns.contains("url"))
+    assemble(query, terms, page, excerpts, urls,
+      completionsOf(Executor.completions(corpus, query, completionsK, params)))
+  }
 
   /** Physical-path variant: hits/completions from the block index, excerpt
     * text from its docs store; the corpus is never read. With `cache`, a
@@ -92,107 +95,113 @@ object Search {
     * ([[graft.query.QueryHistory.default]]) -- prefix extensions filter
     * cached relations instead of re-scanning blocks either way.
     */
-  def searchIndex(reader: graft.index.IndexReader, query: String, k: Int = 10,
+  def searchIndex(reader: IndexReader, query: String, k: Int = 10,
                   completionsK: Int = 10, excerptRadius: Int = 2,
-                  cache: Option[graft.query.IndexQueryCache] = None,
-                  params: graft.query.QueryParams = graft.query.QueryParams.Default): SearchResult =
+                  cache: Option[IndexQueryCache] = None,
+                  params: QueryParams = QueryParams.Default): SearchResult =
     // borrow scope: every history relation handed to this request stays
-    // eviction-guarded until assemble() has fully materialized the
-    // result -- a concurrent request's oversized insert (or our own)
-    // cannot unpersist a relation mid-collect (IndexQueryCache.borrow)
+    // eviction-guarded until the result is fully materialized -- a
+    // concurrent request's oversized insert (or our own) cannot unpersist
+    // a relation mid-collect (IndexQueryCache.borrow)
     cache.getOrElse(graft.query.QueryHistory.default).borrow {
       searchIndexInner(reader, query, k, completionsK, excerptRadius, cache, params)
     }
 
-  private def searchIndexInner(reader: graft.index.IndexReader, query: String, k: Int,
-                  completionsK: Int, excerptRadius: Int,
-                  cache: Option[graft.query.IndexQueryCache],
-                  params: graft.query.QueryParams): SearchResult = {
-    // serve* facades: the driver-resident grammar path under its guards
-    // (zero Spark jobs warm), the distributed plans past them
-    val topk = graft.query.IndexExecutor.serveHits(reader, query, k, params, cache)
-    // stays by-name through assemble: completions plan (and its candidate
-    // round-trips) only builds when the last part is a prefix
-    def compl = graft.query.IndexExecutor.serveCompletions(
-      reader, query, completionsK, params, cache)
-    assemble(query, k, completionsK, topk, compl,
-      (hits, ex, pf) =>
-        // no docs store built next to this index -> hits without excerpts
-        // (the reference server likewise needs docs.DB for excerpts)
-        if (reader.hasDocsStore)
-          // locally-served hits read texts from the driver docs LRU (zero
-          // jobs warm); distributed hits keep the semi-join
-          graft.query.LocalServe.excerptsAll(reader, hits, ex, pf,
-            excerptRadius, params.excerptsPerHit).getOrElse(
-            Excerpts.generateAll(reader.docs, hits, ex, pf, excerptRadius,
-              params.excerptsPerHit))
-        else hits.sparkSession.emptyDataFrame
-          .select(org.apache.spark.sql.functions.lit(0L).as("doc_id"),
-            org.apache.spark.sql.functions.lit("").as("excerpt"))
-          .limit(0),
-      hits =>
-        if (reader.hasDocsStore)
-          graft.query.LocalServe.urls(reader, hits)
-            .getOrElse(urlsOf(reader.docs, hits))
-        else Map.empty)
+  private def searchIndexInner(reader: IndexReader, query: String, k: Int,
+                               completionsK: Int, excerptRadius: Int,
+                               cache: Option[IndexQueryCache],
+                               params: QueryParams): SearchResult = {
+    // hits page: LocalServe's driver arrays under its guards (zero Spark
+    // jobs warm), else the distributed plan, executed ONCE
+    val page = LocalServe.hitsPage(reader, query, k, params).getOrElse(
+      pageOf(cache.fold(IndexExecutor.hits(reader, query, k, params))(
+        IndexExecutor.hits(reader, query, k, params, _))))
+    val terms = Terms(query)
+    val ids = page.map(_._1).toSeq
+    val (excerpts, urls) =
+      // no docs store built next to this index -> hits without excerpts
+      // (the reference server likewise needs docs.DB for excerpts)
+      if (!reader.hasDocsStore) (Map.empty[Long, String], Map.empty[Long, String])
+      else (for {
+        // hit texts from the driver docs LRU, whichever path served the
+        // hits (one pruned scan cold, zero jobs warm)
+        ex <- LocalServe.excerptsOf(reader, ids, terms.exact, terms.prefixes,
+          excerptRadius, params.excerptsPerHit)
+        us <- LocalServe.urlsOf(reader, ids)
+      } yield (ex, us)).getOrElse(joinDocs(reader.docs, page, terms,
+        excerptRadius, params.excerptsPerHit, withUrls = true))
+    assemble(query, terms, page, excerpts, urls,
+      LocalServe.completionsPage(reader, query, completionsK, params).getOrElse(
+        completionsOf(cache.fold(IndexExecutor.completions(reader, query, completionsK, params))(
+          IndexExecutor.completions(reader, query, completionsK, params, _)))))
   }
 
-  /** Hit urls from a (doc_id, url, ...) relation: broadcast semi-join on
-    * the k hit ids, one k-sized driver round-trip.
+  /** What the assembly reads off the query (parsed under default params):
+    * the highlight words -- exact words and prefixes of its non-NOT parts
+    * -- and whether completions are asked for (the last part is a prefix).
     */
-  private def urlsOf(docs: DataFrame, hits: DataFrame): Map[Long, String] = {
-    import org.apache.spark.sql.functions.col
-    docs.join(hits.select(col("doc_id")).distinct(), Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), col("url"))
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+  private final case class Terms(exact: Seq[String], prefixes: Seq[String],
+                                 lastIsPrefix: Boolean)
+
+  private object Terms {
+    def apply(query: String): Terms = {
+      val parsed = QueryParser.parse(query)
+      val words = parsed.parts.map(_.atom).collect {
+        case w: QueryParser.Word if !w.not => w
+        // representative word alternative (OR alts may also be ranges)
+        case QueryParser.OrAtoms(alts)
+            if alts.exists(_.isInstanceOf[QueryParser.Word]) =>
+          alts.collectFirst { case w: QueryParser.Word => w }.get
+      }
+      val lastIsPrefix = parsed.parts.last.atom match {
+        case w: QueryParser.Word => w.prefix
+        case _ => false
+      }
+      Terms(words.filterNot(_.prefix).map(_.text), words.filter(_.prefix).map(_.text),
+        lastIsPrefix)
+    }
   }
 
-  private def assemble(query: String, k: Int, completionsK: Int,
-                       hitsDf0: DataFrame, completionsDf: => DataFrame,
-                       excerptsFor: (DataFrame, Seq[String], Seq[String]) => DataFrame,
-                       urlsFor: DataFrame => Map[Long, String]): SearchResult = {
-    // Execute the top-k plan ONCE and re-expose the k rows as a
-    // LocalRelation: the excerpt join, the url join and the final hit
-    // assembly below all consume the hits, and a distributed-fallback plan
-    // (over-budget postings, fuzzy best-match) would otherwise run end-to-end
-    // for EACH consumer. A LocalRelation also satisfies the
-    // LocalServe.excerptsAll guard, so fallback hits still serve excerpts
-    // and urls from the driver docs LRU (one pruned scan cold, zero jobs
-    // warm) instead of two per-request semi-joins. For the warm serving
-    // path the hits are already a (cached) LocalRelation and this collect
-    // runs no jobs.
-    val hitsDf = hitsDf0.sparkSession.createDataFrame(
-      java.util.Arrays.asList(hitsDf0.collect(): _*), hitsDf0.schema)
-    val parsed = QueryParser.parse(query)
-    // highlight terms: exact words + prefixes of the query
-    val words = parsed.parts.map(_.atom).collect {
-      case w: QueryParser.Word if !w.not => w
-      // representative word alternative (OR alts may also be ranges)
-      case QueryParser.OrAtoms(alts)
-          if alts.exists(_.isInstanceOf[QueryParser.Word]) =>
-        alts.collectFirst { case w: QueryParser.Word => w }.get
-    }
-    val exact = words.filterNot(_.prefix).map(_.text)
-    val prefixes = words.filter(_.prefix).map(_.text)
-    val excerpts = excerptsFor(hitsDf, exact, prefixes)
+  /** Executes a (doc_id, score) hits plan once into a driver page. */
+  private def pageOf(hits: DataFrame): Array[(Long, Double)] =
+    hits.collect().map(r => (r.getLong(0), r.getDouble(1)))
+
+  private def completionsOf(df: DataFrame): Array[(String, Double, Long, Long)] =
+    df.collect().map(r => (r.getString(0), r.getDouble(1), r.getLong(2), r.getLong(3)))
+
+  /** Excerpts and urls of a driver page from a (doc_id, text[, url])
+    * relation: the page re-exposed as a LocalRelation, then one semi-join
+    * each -- the distributed plan behind the page never runs again.
+    */
+  private def joinDocs(docs: DataFrame, page: Array[(Long, Double)], terms: Terms,
+                       er: Int, en: Int,
+                       withUrls: Boolean): (Map[Long, String], Map[Long, String]) = {
+    import org.apache.spark.sql.functions.col
+    val hits = docs.sparkSession.createDataFrame(page.toSeq).toDF("doc_id", "score")
+    val excerpts = Excerpts.generateAll(docs, hits, terms.exact, terms.prefixes, er, en)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    val urls = urlsFor(hitsDf)
+    val urls =
+      if (!withUrls) Map.empty[Long, String]
+      else docs.join(hits.select(col("doc_id")).distinct(), Seq("doc_id"), "left_semi")
+        .select(col("doc_id"), col("url"))
+        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    (excerpts, urls)
+  }
 
-    val hits = hitsDf.collect().map { r =>
-      Hit(r.getLong(0), r.getDouble(1), excerpts.getOrElse(r.getLong(0), ""),
-        urls.getOrElse(r.getLong(0), ""))
+  /** Builds the answer from driver-resident pieces only -- no Dataset is
+    * built or collected here: the hits page in page order with each hit's
+    * excerpt and url where the docs source holds it, and the completions
+    * page (by-name: only computed when the last part is a prefix).
+    */
+  private def assemble(query: String, terms: Terms, page: Array[(Long, Double)],
+                       excerpts: Map[Long, String], urls: Map[Long, String],
+                       completions: => Array[(String, Double, Long, Long)]): SearchResult = {
+    val hits = page.map { case (id, score) =>
+      Hit(id, score, excerpts.getOrElse(id, ""), urls.getOrElse(id, ""))
     }.toSeq
-
-    val lastIsPrefix = parsed.parts.last.atom match {
-      case w: QueryParser.Word => w.prefix
-      case _ => false
-    }
     val comps =
-      if (!lastIsPrefix) Seq.empty
-      else completionsDf.collect().map { r =>
-        Completion(r.getString(0), r.getDouble(1), r.getLong(2), r.getLong(3))
-      }.toSeq
-
+      if (!terms.lastIsPrefix) Seq.empty
+      else completions.map { case (t, sc, dc, oc) => Completion(t, sc, dc, oc) }.toSeq
     SearchResult(query, hits, comps)
   }
 }

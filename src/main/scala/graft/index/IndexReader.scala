@@ -827,9 +827,9 @@ object IndexReader {
   val LocalListBudgetPostings: Long = 2L * 1024 * 1024
 
   /** A/B kill switch: SPARK_GRAFT_NO_LOCAL_SERVE=1 forces every serve*
-    * facade onto the distributed plans.
+    * facade onto the distributed plans (specs flip it in-process).
     */
-  lazy val localServeEnabled: Boolean =
+  @volatile private[graft] var localServeEnabled: Boolean =
     !sys.env.get("SPARK_GRAFT_NO_LOCAL_SERVE").contains("1")
 
   /** Shard visibility under the compaction log.

@@ -292,12 +292,12 @@ object IndexExecutor {
   def completions(reader: IndexReader, query: String, k: Int): DataFrame =
     Eval.completions(defaultSrc(reader), query, k)
 
-  // ---- serving facades --------------------------------------------------
+  // ---- serving facade ---------------------------------------------------
   // The driver-resident grammar path under its guards, the distributed
-  // plans past them -- what a serving client calls (Search/CompletionServer
-  // route through these). The explicit topK/hits/completions above are
-  // unchanged and keep pinning the distributed plans in every gate;
-  // LocalServeSpec pins the two paths' results identical.
+  // plans past them, as one DataFrame (Search takes LocalServe's arrays
+  // directly). The explicit topK/hits/completions here keep pinning the
+  // distributed plans in every gate; LocalServeSpec pins the two paths'
+  // results identical.
 
   /** Top-k hits through the local/distributed serving seam. */
   def serveHits(reader: IndexReader, query: String, k: Int,
@@ -306,15 +306,6 @@ object IndexExecutor {
     LocalServe.hits(reader, query, k, params).getOrElse(cache match {
       case Some(c) => hits(reader, query, k, params, c)
       case None => hits(reader, query, k, params)
-    })
-
-  /** Completions through the local/distributed serving seam. */
-  def serveCompletions(reader: IndexReader, query: String, k: Int,
-                       params: QueryParams = QueryParams.Default,
-                       cache: Option[IndexQueryCache] = None): DataFrame =
-    LocalServe.completions(reader, query, k, params).getOrElse(cache match {
-      case Some(c) => completions(reader, query, k, params, c)
-      case None => completions(reader, query, k, params)
     })
 
   def completions(reader: IndexReader, query: String, k: Int,

@@ -20,7 +20,11 @@ import QueryParser._
   * atoms' decoded scored postings are fetched ONCE (one pruned collect per
   * cold atom, LRU-bounded) and the whole part chain -- aggregation
   * algebra, window matching, NOT, top-k -- runs as in-process array
-  * arithmetic returning a LocalRelation: ZERO Spark jobs warm.
+  * arithmetic returning driver arrays: a hits page, a completions page,
+  * and excerpts and urls keyed by doc id from the docs LRU. A warm answer
+  * is ZERO Spark jobs and no Dataset; the `Option[DataFrame]` facades
+  * (`hits`, `completions`, `excerptsAll`, `urls`) wrap the same arrays
+  * for DataFrame callers.
   *
   * Parity is the contract (spec: LocalServeSpec runs both paths over every
   * grammar shape): same BM25 operand order as [[Analysis.bm25Col]], same
@@ -539,19 +543,29 @@ object LocalServe {
   // string, re-used only when the request parameters are compatible
   // (History.h:25-110; CompleterBase.cpp:1125-1139). The local twin: a
   // per-reader LRU of (epoch, kind, query, k, params) -> the final page
-  // rows. Pages are k-sized, so the entry cap bounds memory at a few MB;
-  // a warm repeated query costs a map lookup + LocalRelation build.
+  // as driver arrays. Pages are k-sized, so the entry cap bounds memory at
+  // a few MB; a warm repeated query costs a map lookup.
+
+  /** One history entry: a final page, plus the LocalRelation over it for
+    * the DataFrame facades, built on first use and kept -- its
+    * QueryExecution memoizes, so a history hit re-collects the planned
+    * relation (sub-ms) instead of re-running analysis + planning (~10 ms).
+    * `rows` is shared by every reader of the entry: never mutate it.
+    */
+  private final class Page[A](val rows: Array[A], toDf: Array[A] => DataFrame) {
+    lazy val df: DataFrame = toDf(rows)
+  }
 
   private final class ResultCache {
     private val lru = new java.util.LinkedHashMap[
-      (Long, String, String, Int, QueryParams), AnyRef](16, 0.75f, true) {
+      (Long, String, String, Int, QueryParams), Page[_]](16, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[(Long, String, String, Int, QueryParams), AnyRef]): Boolean =
+          e: java.util.Map.Entry[(Long, String, String, Int, QueryParams), Page[_]]): Boolean =
         size > LocalServe.ResultCacheMaxEntries
     }
-    def get(k: (Long, String, String, Int, QueryParams)): AnyRef =
+    def get(k: (Long, String, String, Int, QueryParams)): Page[_] =
       synchronized(lru.get(k))
-    def put(k: (Long, String, String, Int, QueryParams), v: AnyRef): Unit =
+    def put(k: (Long, String, String, Int, QueryParams), v: Page[_]): Unit =
       synchronized { lru.put(k, v); () }
     def count: Int = synchronized(lru.size)
   }
@@ -577,136 +591,170 @@ object LocalServe {
   private[graft] def cachedResultCount(reader: IndexReader): Int =
     resultCacheFor(reader).count
 
-  // ---- top-k / completions facades -------------------------------------------
+  /** The history entry under `key`, else `compute`d and recorded; None
+    * (nothing recorded) when `compute` cannot serve the query locally.
+    */
+  private def historyEntry[A](reader: IndexReader, key: (Long, String, String, Int, QueryParams),
+                              toDf: Array[A] => DataFrame)(
+                              compute: => Option[Array[A]]): Option[Page[A]] = {
+    if (!IndexReader.localServeEnabled) return None
+    val cached = if (resultHistoryEnabled) resultCacheFor(reader).get(key) else null
+    if (cached != null) return Some(cached.asInstanceOf[Page[A]])
+    compute.map { rows =>
+      val p = new Page(rows, toDf)
+      resultCacheFor(reader).put(key, p)
+      p
+    }
+  }
+
+  // ---- top-k / completions ------------------------------------------------------
 
   private def round4(x: Double): Double =
     BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
 
-  /** The local twin of [[Eval.hits]]: 4dp rounding applied BEFORE the
-    * ordering (the distributed contract: evalDocs rounds, hits sorts), page
-    * [firstHit, firstHit + k) of the total order. Only a candidate window
-    * is rounded: rounding is monotone and moves a value <= 5e-5, so only
-    * docs within 1e-4 of the boundary's raw score can cross it -- the same
-    * argument [[IndexReader.serveTopKOr]]'s spec pins.
+  /** The local twin of [[Eval.hits]] as a driver page: (doc_id, score) in
+    * page order. 4dp rounding applied BEFORE the ordering (the distributed
+    * contract: evalDocs rounds, hits sorts), page [firstHit, firstHit + k)
+    * of the total order. Only a candidate window is rounded: rounding is
+    * monotone and moves a value <= 5e-5, so only docs within 1e-4 of the
+    * boundary's raw score can cross it -- the same argument
+    * [[IndexReader.serveTopKOr]]'s spec pins. None -> the caller falls
+    * back to the distributed plans. The array is shared: never mutate it.
     */
+  def hitsPage(reader: IndexReader, query: String, k: Int,
+               params: QueryParams): Option[Array[(Long, Double)]] =
+    hitsEntry(reader, query, k, params).map(_.rows)
+
+  /** [[hitsPage]] as a (doc_id, score) LocalRelation. */
   def hits(reader: IndexReader, query: String, k: Int,
-           params: QueryParams): Option[DataFrame] = {
-    if (!IndexReader.localServeEnabled) return None
+           params: QueryParams): Option[DataFrame] =
+    hitsEntry(reader, query, k, params).map(_.df)
+
+  private def hitsEntry(reader: IndexReader, query: String, k: Int,
+                        params: QueryParams): Option[Page[(Long, Double)]] = {
     val spark = reader.spark
     import spark.implicits._
-    val histKey = (reader.indexEpoch, "h", query, k, params)
-    val cached = if (resultHistoryEnabled) resultCacheFor(reader).get(histKey) else null
-    if (cached != null) return Some(cached.asInstanceOf[DataFrame])
-    val parsed = QueryParser.parse(query, params.normalizeWords)
-    val src = new IndexAtomSource(reader)
-    evalDocsLocal(reader, src, parsed, params).map { rel =>
-      val n = params.firstHit + k
-      val page: Seq[(Long, Double)] = params.rankDocs match {
-        case "doc" =>
-          val asc = params.sortDocsAsc.getOrElse(true)
-          val ids = if (asc) rel.docIds.indices else rel.docIds.indices.reverse
-          ids.slice(params.firstHit, n)
-            .map(i => (rel.docIds(i), round4(rel.scores(i))))
-        case _ if n == 0 => Seq.empty // k = 0: an empty page of the order
-        case _ =>
-          val asc = params.sortDocsAsc.getOrElse(false)
-          val cand: Array[Int] =
-            if (n >= rel.docIds.length) rel.docIds.indices.toArray
-            else {
-              // raw boundary via a size-n heap, then the 1e-4 safety margin
-              val heap = new java.util.PriorityQueue[java.lang.Double](n,
-                if (asc) java.util.Comparator.reverseOrder[java.lang.Double]()
-                else java.util.Comparator.naturalOrder[java.lang.Double]())
-              rel.scores.foreach { v =>
-                if (heap.size < n) heap.add(v)
-                else if (if (asc) v < heap.peek() else v > heap.peek()) {
-                  heap.poll(); heap.add(v)
-                }
-              }
-              val cut = heap.peek()
-              rel.scores.indices.filter(i =>
-                if (asc) rel.scores(i) <= cut + 1e-4
-                else rel.scores(i) >= cut - 1e-4).toArray
-            }
-          val rounded = cand.map(i => (rel.docIds(i), round4(rel.scores(i))))
-          val sorted =
-            if (asc) rounded.sortBy { case (doc, sc) => (sc, doc) }
-            else rounded.sortBy { case (doc, sc) => (-sc, doc) }
-          sorted.slice(params.firstHit, n).toSeq
-      }
-      // cache the DataFrame itself: its QueryExecution memoizes, so a
-      // history hit re-collects the planned LocalRelation (sub-ms) instead
-      // of re-running analysis + planning (~10 ms) on fresh page rows
-      val df = page.toDF("doc_id", "score")
-      resultCacheFor(reader).put(histKey, df)
-      df
+    historyEntry(reader, (reader.indexEpoch, "h", query, k, params),
+        (rows: Array[(Long, Double)]) => rows.toSeq.toDF("doc_id", "score")) {
+      val parsed = QueryParser.parse(query, params.normalizeWords)
+      evalDocsLocal(reader, new IndexAtomSource(reader), parsed, params)
+        .map(topPage(_, k, params))
     }
   }
 
-  /** The local twin of [[Eval.completions]]: the last part's terms within
-    * the matching docs, scored under the word-side knobs, ranked by `rw=`.
+  private def topPage(rel: Rel, k: Int, params: QueryParams): Array[(Long, Double)] = {
+    val n = params.firstHit + k
+    params.rankDocs match {
+      case "doc" =>
+        val asc = params.sortDocsAsc.getOrElse(true)
+        val ids = if (asc) rel.docIds.indices else rel.docIds.indices.reverse
+        ids.slice(params.firstHit, n)
+          .map(i => (rel.docIds(i), round4(rel.scores(i)))).toArray
+      case _ if n == 0 => Array.empty // k = 0: an empty page of the order
+      case _ =>
+        val asc = params.sortDocsAsc.getOrElse(false)
+        val cand: Array[Int] =
+          if (n >= rel.docIds.length) rel.docIds.indices.toArray
+          else {
+            // raw boundary via a size-n heap, then the 1e-4 safety margin
+            val heap = new java.util.PriorityQueue[java.lang.Double](n,
+              if (asc) java.util.Comparator.reverseOrder[java.lang.Double]()
+              else java.util.Comparator.naturalOrder[java.lang.Double]())
+            rel.scores.foreach { v =>
+              if (heap.size < n) heap.add(v)
+              else if (if (asc) v < heap.peek() else v > heap.peek()) {
+                heap.poll(); heap.add(v)
+              }
+            }
+            val cut = heap.peek()
+            rel.scores.indices.filter(i =>
+              if (asc) rel.scores(i) <= cut + 1e-4
+              else rel.scores(i) >= cut - 1e-4).toArray
+          }
+        val rounded = cand.map(i => (rel.docIds(i), round4(rel.scores(i))))
+        val sorted =
+          if (asc) rounded.sortBy { case (doc, sc) => (sc, doc) }
+          else rounded.sortBy { case (doc, sc) => (-sc, doc) }
+        sorted.slice(params.firstHit, n)
+    }
+  }
+
+  /** The local twin of [[Eval.completions]] as a driver page of
+    * (term, score, dc, oc): the last part's terms within the matching
+    * docs, scored under the word-side knobs, ranked by `rw=`. The array
+    * is shared: never mutate it.
     */
+  def completionsPage(reader: IndexReader, query: String, k: Int,
+                      params: QueryParams): Option[Array[(String, Double, Long, Long)]] =
+    completionsEntry(reader, query, k, params).map(_.rows)
+
+  /** [[completionsPage]] as a (term, score, dc, oc) LocalRelation. */
   def completions(reader: IndexReader, query: String, k: Int,
-                  params: QueryParams): Option[DataFrame] = {
-    if (!IndexReader.localServeEnabled) return None
+                  params: QueryParams): Option[DataFrame] =
+    completionsEntry(reader, query, k, params).map(_.df)
+
+  private def completionsEntry(reader: IndexReader, query: String, k: Int,
+      params: QueryParams): Option[Page[(String, Double, Long, Long)]] = {
     val spark = reader.spark
     import spark.implicits._
-    val histKey = (reader.indexEpoch, "c", query, k, params)
-    val cached = if (resultHistoryEnabled) resultCacheFor(reader).get(histKey) else null
-    if (cached != null) return Some(cached.asInstanceOf[DataFrame])
-    val parsed = QueryParser.parse(query, params.normalizeWords)
-    // completions over a trailing join block are not part of the grammar
-    // (the distributed path rejects the block atom); fall back so the
-    // behavior stays the distributed path's, not a silent variant
-    if (parsed.parts.last.atom.isInstanceOf[JoinBlock]) return None
-    val src = new IndexAtomSource(reader)
-    for {
-      rel <- evalDocsLocal(reader, src, parsed, params)
-      la <- localAtom(reader, src, parsed.parts.last.atom)
-    } yield {
-      val docSet = new java.util.HashSet[java.lang.Long](math.max(16, rel.docIds.length))
-      rel.docIds.foreach(docSet.add(_))
-      val damping = damp0(parsed.parts.last.atom, params)
-      val perDocMax = params.wordSameDocAgg == QueryParams.Max
-      val acrossMax = params.wordDiffDocsAgg == QueryParams.Max
-      // per-term accumulators, keyed by shared term reference
-      val accS = new java.util.LinkedHashMap[String, java.lang.Double]()
-      val accDc = new java.util.HashMap[String, java.lang.Long]()
-      val accOc = new java.util.HashMap[String, java.lang.Long]()
-      var i = 0
-      while (i < la.nRows) {
-        if (docSet.contains(la.docIds(i))) {
-          val t = la.terms(i)
-          val c = (if (perDocMax) la.score1s(i) else la.scores(i)) * damping
-          val prev = accS.get(t)
-          if (prev == null) accS.put(t, c)
-          else accS.put(t, if (acrossMax) math.max(prev, c) else prev + c)
-          accDc.merge(t, 1L, (a, b) => a + b)
-          accOc.merge(t, la.tfs(i), (a, b) => a + b)
-        }
-        i += 1
+    historyEntry(reader, (reader.indexEpoch, "c", query, k, params),
+        (rows: Array[(String, Double, Long, Long)]) =>
+          rows.toSeq.toDF("term", "score", "dc", "oc")) {
+      val parsed = QueryParser.parse(query, params.normalizeWords)
+      // completions over a trailing join block are not part of the grammar
+      // (the distributed path rejects the block atom); fall back so the
+      // behavior stays the distributed path's, not a silent variant
+      if (parsed.parts.last.atom.isInstanceOf[JoinBlock]) None
+      else {
+        val src = new IndexAtomSource(reader)
+        for {
+          rel <- evalDocsLocal(reader, src, parsed, params)
+          la <- localAtom(reader, src, parsed.parts.last.atom)
+        } yield wordPage(rel, la, damp0(parsed.parts.last.atom, params), k, params)
       }
-      val rows = new scala.collection.mutable.ArrayBuffer[(String, Double, Long, Long)]
-      accS.forEach((t, s) => rows += ((t, round4(s), accDc.get(t), accOc.get(t))))
-      val ordered = params.rankWords match {
-        case "dc" =>
-          if (params.sortWordsAsc.getOrElse(false)) rows.sortBy(r => (r._3, r._1))
-          else rows.sortBy(r => (-r._3, r._1))
-        case "oc" =>
-          if (params.sortWordsAsc.getOrElse(false)) rows.sortBy(r => (r._4, r._1))
-          else rows.sortBy(r => (-r._4, r._1))
-        case "word" =>
-          if (params.sortWordsAsc.getOrElse(true)) rows.sortBy(_._1)
-          else rows.sortBy(_._1)(Ordering[String].reverse)
-        case _ =>
-          if (params.sortWordsAsc.getOrElse(false)) rows.sortBy(r => (r._2, r._1))
-          else rows.sortBy(r => (-r._2, r._1))
-      }
-      val page = ordered.take(k).toSeq
-      val df = page.toDF("term", "score", "dc", "oc")
-      resultCacheFor(reader).put(histKey, df)
-      df
     }
+  }
+
+  private def wordPage(rel: Rel, la: LocalAtom, damping: Double, k: Int,
+                       params: QueryParams): Array[(String, Double, Long, Long)] = {
+    val docSet = new java.util.HashSet[java.lang.Long](math.max(16, rel.docIds.length))
+    rel.docIds.foreach(docSet.add(_))
+    val perDocMax = params.wordSameDocAgg == QueryParams.Max
+    val acrossMax = params.wordDiffDocsAgg == QueryParams.Max
+    // per-term accumulators, keyed by shared term reference
+    val accS = new java.util.LinkedHashMap[String, java.lang.Double]()
+    val accDc = new java.util.HashMap[String, java.lang.Long]()
+    val accOc = new java.util.HashMap[String, java.lang.Long]()
+    var i = 0
+    while (i < la.nRows) {
+      if (docSet.contains(la.docIds(i))) {
+        val t = la.terms(i)
+        val c = (if (perDocMax) la.score1s(i) else la.scores(i)) * damping
+        val prev = accS.get(t)
+        if (prev == null) accS.put(t, c)
+        else accS.put(t, if (acrossMax) math.max(prev, c) else prev + c)
+        accDc.merge(t, 1L, (a, b) => a + b)
+        accOc.merge(t, la.tfs(i), (a, b) => a + b)
+      }
+      i += 1
+    }
+    val rows = new scala.collection.mutable.ArrayBuffer[(String, Double, Long, Long)]
+    accS.forEach((t, s) => rows += ((t, round4(s), accDc.get(t), accOc.get(t))))
+    val ordered = params.rankWords match {
+      case "dc" =>
+        if (params.sortWordsAsc.getOrElse(false)) rows.sortBy(r => (r._3, r._1))
+        else rows.sortBy(r => (-r._3, r._1))
+      case "oc" =>
+        if (params.sortWordsAsc.getOrElse(false)) rows.sortBy(r => (r._4, r._1))
+        else rows.sortBy(r => (-r._4, r._1))
+      case "word" =>
+        if (params.sortWordsAsc.getOrElse(true)) rows.sortBy(_._1)
+        else rows.sortBy(_._1)(Ordering[String].reverse)
+      case _ =>
+        if (params.sortWordsAsc.getOrElse(false)) rows.sortBy(r => (r._2, r._1))
+        else rows.sortBy(r => (-r._2, r._1))
+    }
+    ordered.take(k).toArray
   }
 
   private def damp0(a: Atom, params: QueryParams): Double =
@@ -717,14 +765,15 @@ object LocalServe {
   // The reference serves excerpt text from a memory-mapped docs.DB record
   // fetch per hit (ExcerptsGenerator.cpp; docs.DB built offline). The
   // distributed twin is a semi-join over the docs parquet per request --
-  // correct at any scale but 1-2 jobs per query. When the HITS side is
-  // already a LocalRelation (the grammar path above), hit texts come from
-  // a per-reader byte-budgeted LRU instead (one pruned scan per cold doc
-  // set), and excerpt generation runs the exact Excerpts.generateAll
-  // algorithm in-process: a warm full search -- hits, completions,
-  // excerpts, urls -- runs ZERO Spark jobs. Interactive typing chains
-  // (`a`, `aa`, `aal`) re-rank the same top docs, so the LRU hit rate is
-  // the autocompletion hit rate.
+  // correct at any scale but 1-2 jobs per query. Once the hit ids are on
+  // the driver (a hits page above, or a collected distributed page), hit
+  // texts come from a per-reader byte-budgeted LRU instead (one pruned
+  // scan per cold doc set), and excerpt generation runs the exact
+  // Excerpts.generateAll algorithm in-process: a warm full search -- hits,
+  // completions, excerpts, urls -- is array work only, with ZERO Spark
+  // jobs and no Dataset. Interactive typing chains (`a`, `aa`, `aal`)
+  // re-rank the same top docs, so the LRU hit rate is the autocompletion
+  // hit rate.
 
   private final class DocsCache {
     private val lru = new java.util.LinkedHashMap[Long, (String, String)](16, 0.75f, true)
@@ -761,7 +810,7 @@ object LocalServe {
 
   /** (url, text) for each hit id present in the docs store, misses fetched
     * in ONE pruned scan (doc_id IN-list reaches the parquet row-group
-    * stats); warm ids run zero jobs.
+    * stats); warm ids are LRU lookups, no Spark job and no Dataset.
     */
   private def docTexts(reader: IndexReader,
                        ids: Seq[Long]): Map[Long, (String, String)] = {
@@ -784,6 +833,12 @@ object LocalServe {
     }
     out.toMap
   }
+
+  /** Whether hit docs come from the driver docs LRU: local serving on and a
+    * docs store next to the index.
+    */
+  private def docsServed(reader: IndexReader): Boolean =
+    IndexReader.localServeEnabled && reader.hasDocsStore
 
   /** True iff the relation is already driver-resident -- collecting it
     * runs no jobs, so the local docs path adds none.
@@ -815,29 +870,41 @@ object LocalServe {
     windows.mkString(" ... ")
   }
 
-  /** Driver-resident excerpts for an already-local hits relation: Some of
-    * a (doc_id, excerpt) LocalRelation when both the hits and the doc
-    * texts are served locally; None -> caller keeps the distributed
-    * semi-join ([[Excerpts.generateAll]]).
+  /** Excerpt per hit id held in the docs store, generated in-process from
+    * the driver docs LRU; None -> caller keeps the distributed semi-join
+    * ([[Excerpts.generateAll]]).
+    */
+  def excerptsOf(reader: IndexReader, ids: Seq[Long], exact: Seq[String],
+                 prefixes: Seq[String], er: Int, en: Int): Option[Map[Long, String]] =
+    if (!docsServed(reader)) None
+    else Some(docTexts(reader, ids).map { case (id, (_, text)) =>
+      id -> generateAllLocal(text, exact, prefixes, er, en)
+    })
+
+  /** Url per hit id held in the docs store, from the driver docs LRU;
+    * None -> caller keeps the distributed semi-join.
+    */
+  def urlsOf(reader: IndexReader, ids: Seq[Long]): Option[Map[Long, String]] =
+    if (!docsServed(reader)) None
+    else Some(docTexts(reader, ids).map { case (id, (url, _)) => id -> url })
+
+  /** [[excerptsOf]] for an already-local hits relation, as a
+    * (doc_id, excerpt) LocalRelation; None for a distributed relation.
     */
   def excerptsAll(reader: IndexReader, hits: DataFrame, exact: Seq[String],
                   prefixes: Seq[String], er: Int, en: Int): Option[DataFrame] = {
-    if (!IndexReader.localServeEnabled || !reader.hasDocsStore ||
-        !isLocalRelation(hits)) return None
+    if (!docsServed(reader) || !isLocalRelation(hits)) return None
     val spark = reader.spark
     import spark.implicits._
     val ids = hits.collect().map(_.getLong(0)).toSeq
-    val texts = docTexts(reader, ids)
-    Some(ids.flatMap(id => texts.get(id).map(t =>
-      (id, generateAllLocal(t._2, exact, prefixes, er, en))))
-      .toDF("doc_id", "excerpt"))
+    excerptsOf(reader, ids, exact, prefixes, er, en).map(ex =>
+      ids.flatMap(id => ex.get(id).map(id -> _)).toDF("doc_id", "excerpt"))
   }
 
-  /** Driver-resident hit urls (the [[graft.api.Search]] urlsOf twin). */
-  def urls(reader: IndexReader, hits: DataFrame): Option[Map[Long, String]] = {
-    if (!IndexReader.localServeEnabled || !reader.hasDocsStore ||
-        !isLocalRelation(hits)) return None
-    val ids = hits.collect().map(_.getLong(0)).toSeq
-    Some(docTexts(reader, ids).map { case (id, (url, _)) => id -> url })
-  }
+  /** [[urlsOf]] for an already-local hits relation; None for a distributed
+    * relation.
+    */
+  def urls(reader: IndexReader, hits: DataFrame): Option[Map[Long, String]] =
+    if (!docsServed(reader) || !isLocalRelation(hits)) None
+    else urlsOf(reader, hits.collect().map(_.getLong(0)).toSeq)
 }

@@ -26,8 +26,21 @@ import org.apache.spark.sql.SparkSession
   * serving-session history ([[graft.query.IndexQueryCache]]), so a typing
   * stream of prefixes extends cached relations instead of re-scanning
   * blocks.
+  *
+  * TCP_NODELAY: the JDK server flushes the response headers in
+  * `sendResponseHeaders` and writes the body as a second small segment.
+  * Without TCP_NODELAY (`sun.net.httpserver.nodelay`, default false),
+  * Nagle's algorithm holds that body back until the client's delayed ACK
+  * of the headers arrives -- a 40 ms floor on Linux under every warm
+  * keep-alive keystroke. This object's initializer therefore sets the
+  * property to `true` unless the user already set it. It must run before
+  * the first `HttpServer.create` in the JVM: the JDK reads the property
+  * once, when `sun.net.httpserver.ServerConfig` is initialized.
   */
 object CompletionServer {
+
+  if (System.getProperty("sun.net.httpserver.nodelay") == null)
+    System.setProperty("sun.net.httpserver.nodelay", "true")
 
   /** Request-handler threads (reference: StartCompletionServer `-m`
     * threads, thread-per-request forking): concurrent autocomplete
