@@ -4,6 +4,8 @@ import graft.core.Analysis
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import java.util.concurrent.CompletableFuture
+
 /** Query-side access to a built index directory.
   *
   * Pruning mirrors the reference's block locate (HYBCompleter.cpp:661-746,
@@ -112,7 +114,7 @@ class IndexReader(val spark: SparkSession, val dir: String,
       try {
         val p = new org.apache.hadoop.fs.Path(s"$dir/docs")
         p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-      } catch { case _: Throwable => false }
+      } catch { case scala.util.control.NonFatal(_) => false }
     if (present) docsStoreSeen = true
     present
   }
@@ -139,17 +141,22 @@ class IndexReader(val spark: SparkSession, val dir: String,
     !statsRow.schema.fieldNames.contains("store_positions") ||
       statsRow.getAs[Boolean]("store_positions")
 
+  /** Dictionary size from stats; -1 on an index written before stats held it. */
+  private lazy val vocabSize: Long =
+    if (statsRow.schema.fieldNames.contains("vocab_size")) statsRow.getAs[Long]("vocab_size")
+    else -1L
+
   /** BY_PREFIXES boundary cut ids, when the index was built with
     * prefix-boundary block formation (HYBIndex.cpp:247-264 analog): sorted
-    * first-term-ids of each boundary group, loaded once (tiny).
+    * first-term-ids of each boundary group, loaded once (tiny). A
+    * filesystem error propagates and leaves the value unset, so the next
+    * access retries: memoizing "no cuts" after a transient error would
+    * bucket ids as `id / bucketSize` for the reader's life and prune the
+    * wrong bucket dirs, dropping postings without an error.
     */
   lazy val prefixCuts: Option[Array[Long]] = {
-    val present =
-      try {
-        val p = new org.apache.hadoop.fs.Path(s"$dir/boundaries/_SUCCESS")
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-      } catch { case _: Throwable => false }
-    if (!present) None
+    val p = new org.apache.hadoop.fs.Path(s"$dir/boundaries/_SUCCESS")
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) None
     else Some(spark.read.parquet(s"$dir/boundaries")
       .select(col("cut_id")).as[Long].collect().sorted)
   }
@@ -224,8 +231,101 @@ class IndexReader(val spark: SparkSession, val dir: String,
 
   def idf(df: Long): Double = math.log((nDocs - df + 0.5) / (df + 0.5) + 1.0)
 
-  /** Driver-side vocabulary memo (the reference holds its whole vocabulary
-    * in RAM, Vocabulary.h): term -> (term_id, df) and prefix -> id range
+  // ---- serving image ----------------------------------------------------
+  //
+  // The reference answers every query from RAM (Vocabulary.h, HYBIndex.h,
+  // DocsDB.h). When an index fits the driver budgets, its vocabulary,
+  // encoded posting segments and docs store are read once into an
+  // immutable [[ServingImage]], shared by every reader of the same
+  // (dir, epoch). The load starts on the first serving request and runs on
+  // its own thread with parquet-mr, so it adds no Spark job to any request
+  // and pins no Spark-cached relation; requests before it is published,
+  // and every store past its budget, keep the per-atom and per-miss fetches.
+
+  /** Spec hook: false withholds the serving image from this reader, which
+    * then serves through the per-atom and per-miss fetches.
+    */
+  @volatile private[graft] var imageEnabled: Boolean = true
+
+  /** This reader's share of its (dir, epoch)'s image load: the strong
+    * reference that keeps a published image alive while the reader is.
+    */
+  @transient @volatile private var imageSlot: CompletableFuture[Option[ServingImage]] = null
+
+  /** The published serving image; None before it is published, when the
+    * vocabulary does not fit, when withheld, or with local serving off.
+    * Never starts a load.
+    */
+  private[graft] def image: Option[ServingImage] = imageOf(start = false)
+
+  /** [[image]], starting the background load if none is running or done:
+    * the serving paths call this, so only a serving session loads.
+    */
+  private[graft] def imageOrLoad(): Option[ServingImage] = imageOf(start = true)
+
+  private def imageOf(start: Boolean): Option[ServingImage] =
+    if (!imageEnabled || !IndexReader.localServeEnabled) None
+    else {
+      val f = imageLoad(start)
+      if (f != null && f.isDone && !f.isCompletedExceptionally) f.join() else None
+    }
+
+  /** The running or finished load of this reader's image, joined from the
+    * (dir, epoch) registry; with `start`, a new load when there is none or
+    * the last one failed. Spec hook (awaiting the future).
+    */
+  private[graft] def imageLoad(start: Boolean): CompletableFuture[Option[ServingImage]] = {
+    val mine = imageSlot
+    if (mine != null && !mine.isCompletedExceptionally) return mine
+    var started: CompletableFuture[Option[ServingImage]] = null
+    val images = IndexReader.images
+    if (images.size > 256) images.values.removeIf(_.get == null)
+    val ref = images.compute((dir, indexEpoch), (_, cur) => {
+      val live = if (cur == null) null else cur.get
+      if ((live != null && !live.isCompletedExceptionally) || !start) cur
+      else {
+        started = new CompletableFuture[Option[ServingImage]]()
+        new java.lang.ref.WeakReference(started)
+      }
+    })
+    val f = if (started != null) started else if (ref == null) null else ref.get
+    if (started != null) loadImage(started)
+    if (f != null && !f.isCompletedExceptionally) imageSlot = f
+    f
+  }
+
+  /** Builds the image on a daemon thread and completes `f` with it; a
+    * failure completes `f` exceptionally, publishing nothing, and a later
+    * serving request starts a new load.
+    */
+  private def loadImage(f: CompletableFuture[Option[ServingImage]]): Unit = {
+    IndexReader.imageLoads.incrementAndGet()
+    val t = new Thread(() => {
+      // a thread inherits its parent's job group: the request's timeout
+      // watchdog must never cancel the load
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.clearJobTags()
+      try {
+        val census = censusSnapshot
+        val blockDirs =
+          if (census.present.isEmpty) Seq(s"$dir/blocks")
+          else census.visible.map(s => s"$dir/blocks/shard=$s")
+        f.complete(ServingImage.load(
+          new org.apache.hadoop.conf.Configuration(spark.sparkContext.hadoopConfiguration),
+          dir, blockDirs, vocabSize, hasPositions, hasDocsStore))
+      } catch {
+        case e: Throwable =>
+          System.err.println(s"[graft] serving image of $dir not loaded: $e")
+          f.completeExceptionally(e)
+      }
+    }, "graft-serving-image")
+    t.setDaemon(true)
+    t.start()
+  }
+
+  /** Driver-side vocabulary memo for an index without a published image
+    * (the reference holds its whole vocabulary in RAM, Vocabulary.h; the
+    * image is that analog): term -> (term_id, df) and prefix -> id range
     * resolve through a bounded in-JVM map, so a WARM serving session pays
     * ZERO dictionary jobs per query. Safe because a reader's dictionary is
     * immutable: streaming delta shards reuse the batch dictionary (unseen
@@ -248,7 +348,12 @@ class IndexReader(val spark: SparkSession, val dir: String,
   /** term -> (term_id, df); driver-side lookup of a handful of terms.
     * Memoized per reader; only uncached terms touch the dictionary.
     */
-  def termInfo(terms: Seq[String]): Map[String, (Long, Long)] = {
+  def termInfo(terms: Seq[String]): Map[String, (Long, Long)] = image match {
+    case Some(img) => terms.distinct.flatMap(t => img.vocabulary.termInfo(t).map(t -> _)).toMap
+    case None => termInfoMemoized(terms)
+  }
+
+  private def termInfoMemoized(terms: Seq[String]): Map[String, (Long, Long)] = {
     val hits = scala.collection.mutable.Map.empty[String, (Long, Long)]
     val misses = scala.collection.mutable.ArrayBuffer.empty[String]
     terms.distinct.foreach { t =>
@@ -277,6 +382,8 @@ class IndexReader(val spark: SparkSession, val dir: String,
     * a contiguous id range). Memoized per reader.
     */
   def prefixRange(prefix: String): Option[(Long, Long)] = {
+    val img = image
+    if (img.isDefined) return img.get.vocabulary.prefixRange(prefix)
     val cached = prefixRangeMemo.get(prefix)
     if (cached != null) return cached
     if (prefixRangeMemo.size() > VocabMemoMax) prefixRangeMemo.clear()
@@ -303,9 +410,11 @@ class IndexReader(val spark: SparkSession, val dir: String,
   /** The raw memoized slice rows behind [[vocabSlice]] -- also the per-term
     * df source for the driver-resident prefix serving path.
     */
-  private def vocabSliceRows(prefix: String, lo: Long,
+  private[graft] def vocabSliceRows(prefix: String, lo: Long,
                              hi: Long): Option[Array[(Long, String, Long)]] = {
     if (hi - lo + 1 > IndexReader.MaxSliceTerms) return None
+    val img = image
+    if (img.isDefined) return Some(img.get.vocabulary.idRows(lo, hi))
     if (vocabSliceMemo.size() > IndexReader.MaxSlicePrefixes) vocabSliceMemo.clear()
     vocabSliceMemo.computeIfAbsent(prefix, _ =>
       Some(dictionary.filter(col("term_id").between(lo, hi))
@@ -831,6 +940,21 @@ object IndexReader {
     */
   @volatile private[graft] var localServeEnabled: Boolean =
     !sys.env.get("SPARK_GRAFT_NO_LOCAL_SERVE").contains("1")
+
+  /** Docs budget in chars (~2 bytes each -> ~64 MB): bounds both the docs
+    * LRU and the docs store a serving image holds.
+    */
+  val DocsCacheBudgetChars: Long = 32L * 1024 * 1024
+
+  /** (dir, epoch) -> the load of its serving image, weakly held: readers
+    * hold it strongly ([[IndexReader.imageLoad]]), so an image dies with
+    * the last reader serving it.
+    */
+  private[index] val images = new java.util.concurrent.ConcurrentHashMap[
+    (String, Long), java.lang.ref.WeakReference[CompletableFuture[Option[ServingImage]]]]()
+
+  /** spec hook: serving-image loads started in this process. */
+  private[graft] val imageLoads = new java.util.concurrent.atomic.AtomicInteger()
 
   /** Shard visibility under the compaction log.
     * @param present  every `shard=` dir currently under blocks/

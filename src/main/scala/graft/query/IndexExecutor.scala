@@ -56,7 +56,7 @@ class IndexAtomSource(reader: IndexReader) extends AtomSource {
 
   def atomScored(atom: Atom): DataFrame = {
     import reader.spark.implicits._
-    val cand = candidates(atom)
+    lazy val cand = candidates(atom)
     // one bounded driver round-trip per atom (memoized per index + atom --
     // a serving session answers repeated shapes with zero extra jobs): the
     // candidate term-id set as CONTIGUOUS RUNS. The reference fetches
@@ -85,14 +85,19 @@ class IndexAtomSource(reader: IndexReader) extends AtomSource {
   }
 
   /** Runs plus, for non-hull candidate sets, the driver-held
-    * (term_id, term, df) slice -- both from ONE collect. The slice memo is
+    * (term_id, term, df) slice. With a published serving image, non-fuzzy
+    * atoms resolve from its vocabulary arrays (no job, no memo); otherwise
+    * both come from ONE collect over `cand`. The slice memo is
     * bounded separately ([[IndexAtomSource.SliceCacheMax]] atoms of at most
     * [[IndexAtomSource.MaxExactIds]] tuples); runs stay memoized at the
     * larger [[IndexAtomSource.RangeCacheMax]] because they are a few longs.
     * Hull atoms memoize `None` -- known too big, never re-collected.
     */
-  private def candidateInfo(atom: Atom, cand: DataFrame):
+  private def candidateInfo(atom: Atom, cand: => DataFrame):
       (Seq[(Long, Long)], Option[Array[(Long, String, Long)]]) = {
+    val fromImage = reader.image.flatMap(img =>
+      IndexAtomSource.imageCandidates(img.vocabulary, atom))
+    if (fromImage.isDefined) return fromImage.get
     val key = (reader.dir, reader.indexEpoch, atom)
     val runs0 = IndexAtomSource.rangeCache.get(key)
     val slice0 = IndexAtomSource.sliceCache.get(key)
@@ -128,9 +133,9 @@ class IndexAtomSource(reader: IndexReader) extends AtomSource {
 
   /** Candidate id runs + driver-held slice for an atom -- the resolution
     * the driver-resident grammar path ([[LocalServe]]) shares with the
-    * distributed plans (one memoized round-trip either way).
+    * distributed plans (the serving image, or one memoized round-trip).
     */
-  private[query] def candidateRunsSlice(atom: Atom):
+  private[graft] def candidateRunsSlice(atom: Atom):
       (Seq[(Long, Long)], Option[Array[(Long, String, Long)]]) =
     candidateInfo(atom, candidates(atom))
 
@@ -140,11 +145,13 @@ class IndexAtomSource(reader: IndexReader) extends AtomSource {
     * k-word query pays one dictionary job, not k. Exact-word resolution is
     * `term === text` (CorpusAtomSource.wordPredicate), which is precisely
     * a termInfo row; prefix/range/fuzzy/synonym atoms keep their own
-    * bounded path. The reference's analog is its wholly RAM-resident
-    * vocabulary (Vocabulary.h) -- zero lookups per query; one batched job
-    * is the distributed floor.
+    * bounded path. With a published serving image -- the analog of the
+    * reference's wholly RAM-resident vocabulary (Vocabulary.h) -- every
+    * lookup is a binary search and there is nothing to prefetch; without
+    * one, one batched job is the floor.
     */
   private[query] def prefetchPlainWords(atoms: Seq[Atom]): Unit = {
+    if (reader.image.isDefined) return
     val cold = atoms.distinct.collect {
       case w: Word if !w.prefix && !w.fuzzy && !w.synonym &&
           IndexAtomSource.rangeCache.get((reader.dir, reader.indexEpoch, w)) == null => w
@@ -206,6 +213,47 @@ object IndexAtomSource {
     * and the pushed predicate stay small.
     */
   private[graft] val MaxExactIds = 4096
+
+  /** [[IndexAtomSource.candidateInfo]] from a serving image's vocabulary:
+    * the same runs and slice the dictionary collect gives (exact sets up to
+    * [[MaxExactIds]] ids, else the [min, max] hull), matching Spark's
+    * predicates in its byte order -- `startsWith` and a `[lo, hi]` word
+    * range are index ranges of the sorted terms, an exact or synonym word
+    * a binary search. None for atoms the image does not resolve (fuzzy,
+    * join blocks): they keep the dictionary path.
+    */
+  private[graft] def imageCandidates(v: graft.index.ServingImage.Vocabulary, atom: Atom):
+      Option[(Seq[(Long, Long)], Option[Array[(Long, String, Long)]])] = {
+    // vocabulary index ranges [from, until) of an atom's candidates
+    def ranges(a: Atom): Option[Seq[(Int, Int)]] = a match {
+      case w: Word if w.fuzzy => None
+      case w: Word if w.prefix => Some(Seq((v.lowerBound(w.text), v.prefixEnd(w.text))))
+      case w: Word =>
+        val words = if (w.synonym) Executor.synonymsOf(w.text).toSeq else Seq(w.text)
+        Some(words.map(v.indexOf).filter(_ >= 0).map(i => (i, i + 1)))
+      case WordRange(lo, hi) => Some(Seq((v.lowerBound(lo), v.upperBound(hi))))
+      case OrAtoms(alts) =>
+        alts.foldLeft(Option(Seq.empty[(Int, Int)]))((acc, alt) =>
+          for (x <- acc; y <- ranges(alt)) yield x ++ y)
+      case _: JoinBlock => None
+    }
+    ranges(atom).map { rs =>
+      // sorted, disjoint: overlapping OR alternatives count a term once
+      val merged = rs.filter(r => r._1 < r._2).sortBy(_._1)
+        .foldLeft(List.empty[(Int, Int)]) {
+          case ((f, u) :: rest, (a, b)) if a <= u => (f, math.max(u, b)) :: rest
+          case (acc, r) => r :: acc
+        }.reverse
+      val n = merged.map(r => r._2 - r._1).sum
+      if (n == 0) (Seq.empty, None)
+      else if (n > MaxExactIds)
+        (Seq((v.termIds(merged.head._1), v.termIds(merged.last._2 - 1))), None)
+      else {
+        val rows = merged.toArray.flatMap { case (f, u) => v.rows(f, u) }
+        (toRuns(rows.map(_._1)), Some(rows))
+      }
+    }
+  }
 
   /** Sorted distinct ids -> contiguous [lo, hi] runs. */
   private[graft] def toRuns(sorted: Array[Long]): Seq[(Long, Long)] = {

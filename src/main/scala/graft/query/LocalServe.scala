@@ -1,7 +1,7 @@
 package graft.query
 
 import graft.core.Analysis
-import graft.index.{Codec, IndexReader}
+import graft.index.{Codec, IndexReader, Segment}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import QueryParser._
@@ -17,14 +17,18 @@ import QueryParser._
   * are the 10^12-doc path and stay pinned by every correctness gate; this
   * object is the serving fast path in front of them: when every atom of a
   * parsed query resolves to a driver-budget-sized posting volume, the
-  * atoms' decoded scored postings are fetched ONCE (one pruned collect per
-  * cold atom, LRU-bounded) and the whole part chain -- aggregation
-  * algebra, window matching, NOT, top-k -- runs as in-process array
-  * arithmetic returning driver arrays: a hits page, a completions page,
-  * and excerpts and urls keyed by doc id from the docs LRU. A warm answer
-  * is ZERO Spark jobs and no Dataset; the `Option[DataFrame]` facades
-  * (`hits`, `completions`, `excerptsAll`, `urls`) wrap the same arrays
-  * for DataFrame callers.
+  * atoms' postings are decoded and scored ONCE into an LRU and the whole
+  * part chain -- aggregation algebra, window matching, NOT, top-k -- runs
+  * as in-process array arithmetic returning driver arrays: a hits page, a
+  * completions page, and excerpts and urls keyed by doc id. Cold atoms and
+  * hit texts come from the reader's serving image
+  * ([[graft.index.ServingImage]]) once it is published, so a cold answer
+  * runs ZERO Spark jobs too; before that, and for an index past the image
+  * budgets, a cold request pays one pruned collect for all its cold atoms
+  * and one for its uncached hit texts. A warm answer is ZERO Spark jobs
+  * and no Dataset; the `Option[DataFrame]` facades (`hits`,
+  * `completions`, `excerptsAll`, `urls`) wrap the same arrays for
+  * DataFrame callers.
   *
   * Parity is the contract (spec: LocalServeSpec runs both paths over every
   * grammar shape): same BM25 operand order as [[Analysis.bm25Col]], same
@@ -101,41 +105,31 @@ object LocalServe {
 
   // ---- atom resolution ------------------------------------------------------
 
-  /** The atom's decoded scored rows, from the reader's LRU or one pruned
-    * collect; None when the atom cannot come onto the driver (hull-sized
-    * candidate set, or posting volume past the per-query budget).
+  /** The atom's decoded scored rows (see [[localAtoms]]); None when the
+    * atom cannot come onto the driver.
     */
   private def localAtom(reader: IndexReader, src: IndexAtomSource,
-                        atom: Atom): Option[LocalAtom] = {
-    val cache = cacheFor(reader)
-    val hit = cache.get(reader.indexEpoch, atom)
-    if (hit != null) return Some(hit)
-    val (runs, slice) = src.candidateRunsSlice(atom)
-    if (runs.isEmpty) return Some(EmptyAtom) // unknown word: empty, still local
-    slice match {
-      case None => None // hull-sized candidate set: stays distributed
-      case Some(cand) =>
-        if (cand.iterator.map(_._3).sum > IndexReader.MaxLocalPostingsPerQuery)
-          return None // head atom: stays distributed
-        Some(cache.put(reader.indexEpoch, atom, fetchAtom(reader, runs, cand)))
-    }
-  }
+                        atom: Atom): Option[LocalAtom] =
+    localAtoms(reader, src, Seq(atom)).map(_.get(atom))
 
-  /** Resolve every distinct atom of a part chain; all COLD atoms are
-    * fetched with ONE pruned collect over the union of their block runs
-    * (a cold k-atom query costs one Spark job for postings, not k -- the
-    * reference likewise answers one query with one pass over its words'
-    * block fetches, HYBCompleter.cpp:661-746). Correctness is unchanged:
-    * [[IndexReader.blocksForIdRuns]] is a single OR-predicate scan (no row
-    * duplication), an atom's candidate runs cover every segment of its
-    * candidate term ids, and each atom keeps only its own candidate set's
-    * rows. None when any atom must stay distributed (hull-sized candidate
-    * set or over-budget posting volume) -- decided BEFORE any fetch, so a
-    * fallback query no longer pays partial fetch jobs.
+  /** Resolve every distinct atom of a part chain; COLD atoms decode from
+    * the reader's serving image when it is published (no Spark job), else
+    * all of them are fetched with ONE pruned collect over the union of
+    * their block runs (a cold k-atom query costs one Spark job for
+    * postings, not k -- the reference likewise answers one query with one
+    * pass over its words' block fetches, HYBCompleter.cpp:661-746).
+    * Correctness is unchanged: [[IndexReader.blocksForIdRuns]] is a single
+    * OR-predicate scan (no row duplication), an atom's candidate runs cover
+    * every segment of its candidate term ids, and each atom keeps only its
+    * own candidate set's rows. None when any atom must stay distributed
+    * (hull-sized candidate set or over-budget posting volume) -- decided
+    * BEFORE any fetch, so a fallback query pays no partial fetch jobs.
     */
   private def localAtoms(reader: IndexReader, src: IndexAtomSource,
                          wanted: Seq[Atom]): Option[java.util.HashMap[Atom, LocalAtom]] = {
     val cache = cacheFor(reader)
+    val postings = reader.imageOrLoad().flatMap(img =>
+      img.postings.map(p => (img.vocabulary, p)))
     val atoms = new java.util.HashMap[Atom, LocalAtom]()
     val colds = new scala.collection.mutable.ArrayBuffer[
       (Atom, Seq[(Long, Long)], Array[(Long, String, Long)])]
@@ -156,46 +150,42 @@ object LocalServe {
       }
     }
     if (colds.nonEmpty) {
-      val rows = reader.blocksForIdRuns(colds.iterator.flatMap(_._2).toSeq)
-        .select(blockCols(reader).map(col): _*)
-        .collect()
-      for ((a, _, cand) <- colds) {
-        val byId = cand.iterator.map(c => c._1 -> ((c._2, c._3))).toMap
-        val segs = rows.filter(r => byId.contains(r.getLong(0)))
-          .sortBy(r => (r.getLong(0), r.getLong(1)))
-        atoms.put(a, cache.put(reader.indexEpoch, a, buildAtom(reader, byId, segs)))
+      val segsOf: Array[(Long, String, Long)] => Seq[Segment] = postings match {
+        case Some((vocab, p)) =>
+          cand => cand.sortBy(_._1).toSeq.flatMap(c => p.segments(vocab.indexOfId(c._1)))
+        case None =>
+          val hasPos = reader.hasPositions
+          val rows = reader.blocksForIdRuns(colds.iterator.flatMap(_._2).toSeq)
+            .select((Seq("term_id", "first_doc_id", "n_docs", "doc_deltas", "tfs", "dls") ++
+              (if (hasPos) Seq("positions") else Nil)).map(col): _*)
+            .collect()
+          cand => {
+            val ids = cand.iterator.map(_._1).toSet
+            rows.filter(r => ids.contains(r.getLong(0)))
+              .sortBy(r => (r.getLong(0), r.getLong(1)))
+              .map(r => Segment(r.getLong(0), r.getInt(2), r.getAs[Array[Byte]](3),
+                r.getAs[Array[Byte]](4), r.getAs[Array[Byte]](5),
+                if (hasPos) r.getAs[Array[Byte]](6) else null))
+              .toSeq
+          }
       }
+      for ((a, _, cand) <- colds)
+        atoms.put(a, cache.put(reader.indexEpoch, a, buildAtom(reader, cand, segsOf(cand))))
     }
     Some(atoms)
   }
 
-  private def blockCols(reader: IndexReader): Seq[String] =
-    Seq("term_id", "first_doc_id", "n_docs", "doc_deltas", "tfs",
-      "dls") ++ (if (reader.hasPositions) Seq("positions") else Nil)
-
-  /** One collect over the pruned block scan, decoded driver-side with the
-    * same [[Codec]] the distributed Generator uses and scored with the
-    * exact [[Analysis.bm25Col]] operand order (spec-pinned double parity).
+  /** Decode + score block segments into a [[LocalAtom]], with the same
+    * [[Codec]] the distributed Generator uses and the exact
+    * [[Analysis.bm25Col]] operand order (spec-pinned double parity).
+    * `segs` must be (term_id, first_doc_id)-sorted and hold exactly the
+    * segments of the candidate set `cand` -- (term_id, term, df) rows.
     */
-  private def fetchAtom(reader: IndexReader, runs: Seq[(Long, Long)],
-                        cand: Array[(Long, String, Long)]): LocalAtom = {
+  private def buildAtom(reader: IndexReader, cand: Array[(Long, String, Long)],
+                        segs: Seq[Segment]): LocalAtom = {
     val byId = cand.iterator.map(c => c._1 -> ((c._2, c._3))).toMap
-    val segs = reader.blocksForIdRuns(runs)
-      .select(blockCols(reader).map(col): _*)
-      .collect()
-      .filter(r => byId.contains(r.getLong(0))) // exact candidate set only
-      .sortBy(r => (r.getLong(0), r.getLong(1)))
-    buildAtom(reader, byId, segs)
-  }
-
-  /** Decode + score collected block segments into a [[LocalAtom]]. `segs`
-    * must be (term_id, first_doc_id)-sorted and contain exactly the
-    * candidate set's segments.
-    */
-  private def buildAtom(reader: IndexReader, byId: Map[Long, (String, Long)],
-                        segs: Array[org.apache.spark.sql.Row]): LocalAtom = {
     val hasPos = reader.hasPositions
-    val n = segs.iterator.map(_.getInt(2)).sum
+    val n = segs.iterator.map(_.nDocs).sum
     val terms = new Array[String](n)
     val docIds = new Array[Long](n)
     val tfs = new Array[Long](n)
@@ -204,13 +194,12 @@ object LocalServe {
     val positions = new Array[Array[Int]](n)
     var off = 0
     segs.foreach { r =>
-      val (term, df) = byId(r.getLong(0))
-      val m = r.getInt(2)
-      val ds = Codec.decodeDeltas(reader.doclistCodec, r.getAs[Array[Byte]](3), m)
-      val tf = Codec.decodeLongs(reader.doclistCodec, r.getAs[Array[Byte]](4), m)
-      val dl = Codec.decodeLongs(reader.doclistCodec, r.getAs[Array[Byte]](5), m)
-      val pos = if (hasPos)
-        Codec.decodePositions(reader.doclistCodec, r.getAs[Array[Byte]](6), tf)
+      val (term, df) = byId(r.termId)
+      val m = r.nDocs
+      val ds = Codec.decodeDeltas(reader.doclistCodec, r.docDeltas, m)
+      val tf = Codec.decodeLongs(reader.doclistCodec, r.tfs, m)
+      val dl = Codec.decodeLongs(reader.doclistCodec, r.dls, m)
+      val pos = if (hasPos) Codec.decodePositions(reader.doclistCodec, r.positions, tf)
       else null
       val idfV = reader.idf(df)
       var i = 0
@@ -767,7 +756,8 @@ object LocalServe {
   // distributed twin is a semi-join over the docs parquet per request --
   // correct at any scale but 1-2 jobs per query. Once the hit ids are on
   // the driver (a hits page above, or a collected distributed page), hit
-  // texts come from a per-reader byte-budgeted LRU instead (one pruned
+  // texts come from the serving image's docs (the docs.DB analog) once it
+  // is published, else from a per-reader byte-budgeted LRU (one pruned
   // scan per cold doc set), and excerpt generation runs the exact
   // Excerpts.generateAll algorithm in-process: a warm full search -- hits,
   // completions, excerpts, urls -- is array work only, with ZERO Spark
@@ -797,23 +787,30 @@ object LocalServe {
   }
 
   /** Docs-LRU byte budget (chars; ~2 bytes each -> ~64 MB). */
-  val DocsCacheBudgetChars: Long = 32L * 1024 * 1024
+  val DocsCacheBudgetChars: Long = IndexReader.DocsCacheBudgetChars
 
   private val docsCaches = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[IndexReader, DocsCache]())
   private def docsCacheFor(reader: IndexReader): DocsCache =
     docsCaches.computeIfAbsent(reader, _ => new DocsCache)
 
-  /** spec hook */
+  /** spec hook: docs held on the driver for this reader -- the serving
+    * image's docs store once published, plus the LRU's entries.
+    */
   private[graft] def cachedDocCount(reader: IndexReader): Int =
-    docsCacheFor(reader).count
+    reader.image.flatMap(_.docs).fold(0)(_.size) + docsCacheFor(reader).count
 
-  /** (url, text) for each hit id present in the docs store, misses fetched
-    * in ONE pruned scan (doc_id IN-list reaches the parquet row-group
-    * stats); warm ids are LRU lookups, no Spark job and no Dataset.
+  /** (url, text) for each hit id present in the docs store: binary
+    * searches in the serving image's docs when published; otherwise LRU
+    * lookups, misses fetched in ONE pruned scan (doc_id IN-list reaches
+    * the parquet row-group stats). Warm or imaged ids run no Spark job and
+    * build no Dataset.
     */
   private def docTexts(reader: IndexReader,
                        ids: Seq[Long]): Map[Long, (String, String)] = {
+    val imaged = reader.imageOrLoad().flatMap(_.docs)
+    if (imaged.isDefined)
+      return ids.iterator.flatMap(id => Option(imaged.get.get(id)).map(id -> _)).toMap
     val cache = docsCacheFor(reader)
     val out = scala.collection.mutable.Map.empty[Long, (String, String)]
     val misses = scala.collection.mutable.ArrayBuffer.empty[Long]
